@@ -139,6 +139,39 @@ object GraftCell {
     if (b.length <= STAT_TRUNC) Some(b)
     else prefixStop(JArrays.copyOfRange(b, 0, STAT_TRUNC))
 
+  /** Hadoop's default configuration, parsed once per JVM. Each default
+    * `Configuration` re-parses `core-default.xml` and searches the
+    * classpath for site files on first use, which cost a region-file
+    * task more CPU than decoding its rows. The lazy val publishes the
+    * base only after `size()` has loaded every resource; a default
+    * resource added later (e.g. `JobConf`'s mapred files) reloads it in
+    * place, and the copy constructor re-loads it under the base's lock. */
+  private lazy val baseConf: Configuration = {
+    val c = new Configuration()
+    c.size()
+    c
+  }
+
+  /** A task-private, mutable copy of [[baseConf]]: the same keys as a
+    * fresh default `Configuration`, cloned without XML parsing. The
+    * copy constructor inherits the base's class loader, so the copy is
+    * given the calling thread's context loader, as a default one takes. */
+  private[graft] def hadoopConf(): Configuration =
+    withCallerLoader(new Configuration(baseConf))
+
+  /** [[hadoopConf]] as a `JobConf`, for `TaskAttemptContextImpl`: its
+    * `JobContextImpl` keeps a `JobConf` as is, where it would clone any
+    * other `Configuration` a second time. */
+  private[graft] def hadoopJobConf(): org.apache.hadoop.mapred.JobConf =
+    withCallerLoader(new org.apache.hadoop.mapred.JobConf(baseConf))
+
+  private def withCallerLoader[C <: Configuration](c: C): C = {
+    val loader = Thread.currentThread().getContextClassLoader
+    c.setClassLoader(
+      if (loader != null) loader else classOf[Configuration].getClassLoader)
+    c
+  }
+
   /** HBase FuzzyRowFilter (r17): a FIXED-POSITION wildcard pattern
     * over the rowkey — `?` matches any single byte, every other byte
     * is fixed, and a key matches iff it is at least pattern-length
@@ -1876,7 +1909,7 @@ object CellDeleteRewrite {
     * it). The driver folds these into the dir's persisted manifest. */
   def rewriteFile(file: String, filters: Array[Filter],
                   inPlace: Boolean): (String, Option[CellFileMeta]) = {
-    val conf = new Configuration()
+    val conf = GraftCell.hadoopConf()
     val target =
       if (inPlace) file
       else new java.io.File(new java.io.File(file).getParentFile,
@@ -2061,7 +2094,7 @@ object CellRegionRewrite {
       codec: CompressionCodecName = CompressionCodecName.SNAPPY) {
     private val msgType = cellMsgType
     private val writer = new CellParquetWriterBuilder(new Path(path), msgType)
-      .withConf(new Configuration())
+      .withConf(GraftCell.hadoopConf())
       .withCompressionCodec(codec)
       .withBloomFilterEnabled("rowkey", true)
       .withBloomFilterEnabled("value", true)
@@ -4706,7 +4739,7 @@ object CellFooterCache {
     * `CALL upgrade_manifests` (module-method call: the closure captures
     * nothing, the task ships clean). */
   private[cell] def metaOfFooter(path: String): CellFileMeta = {
-      val conf = new Configuration()
+      val conf = GraftCell.hadoopConf()
       val f = new java.io.File(path)
       val in = HadoopInputFile.fromPath(new Path(f.getPath), conf)
       footerOpens.incrementAndGet()
@@ -5271,7 +5304,7 @@ object CellColumnarPartitionReader {
                          rowGroupPred: Option[FilterPredicate])
       : org.apache.spark.sql.execution.datasources.parquet
           .VectorizedParquetRecordReader = {
-    val conf = new Configuration()
+    val conf = GraftCell.hadoopJobConf()
     // Spark's vectorized reader resolves its catalyst schema from this
     // key (SpecificParquetRecordReaderBase.initialize); the boolean
     // knobs feed ParquetToSparkSchemaConverter and must be present.
@@ -5533,7 +5566,7 @@ class CellPartitionReader(p: CellInputPartition)
   }
 
   private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val conf = new Configuration()
+    val conf = GraftCell.hadoopConf()
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
     // The pushed predicate exists for ROW-GROUP pruning only (stats /
     // dictionary / bloom). Parquet's RECORD-level filter is disabled:
@@ -6067,7 +6100,7 @@ class CellDataWriter(tmpDir: String, partitionId: Int,
       file = f"$tmpDir/part-$partitionId%05d-$seq%04d$codecTag$tag.parquet"
       seq += 1
       writer = new CellParquetWriterBuilder(new Path(file), msgType)
-        .withConf(new Configuration())
+        .withConf(GraftCell.hadoopConf())
         .withCompressionCodec(codec)
         .withBloomFilterEnabled("rowkey", true)
         // r19: value bloom for row-group point skipping — NDV-capped

@@ -8,7 +8,8 @@
 #   SF_SMALL=...    override the Verify/compare scale (default sf0.01)
 #
 # Stages:
-#   1. sbt test                      — unit specs
+#   1. sbt test + perfbench/test     — unit specs, benchmark harness
+#                                      build and seed self-test
 #   2. Verify @ CPUS=3               — Spark outputs + oracle_sql.json
 #   3. tools/lint_oracles.py         — no un-Spark-able oracle types
 #   4. tools/check.py                — type-strict DuckDB value compare
@@ -23,8 +24,9 @@ OUT_A=${OUT_A:-/tmp/gate_a}
 OUT_B=${OUT_B:-/tmp/gate_b}
 RUN_BENCH=${RUN_BENCH:-1}
 
-echo "== gate 1/6: sbt test"
+echo "== gate 1/6: sbt test + perfbench/test"
 sbt -batch test
+(cd perfbench && sbt -batch perfbench/test)
 
 echo "== gate 2/6: Verify @ CPUS=3 -> $OUT_A"
 rm -rf "$OUT_A"
